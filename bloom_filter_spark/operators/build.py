@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..core.hashing import StrBuf, arrow_strbuf
 from ..sketches.base import sketch_for_kind
-from .merge import PARTIAL_SCHEMA, merge_partials_tree
+from .merge import PARTIAL_SCHEMA, fetch_state, merge_partials_tree
 
 
 def _flatten_arrays(col: pd.Series) -> np.ndarray:
@@ -455,8 +455,8 @@ def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
         partials = checkpoint.write_partials(sketch_id, sketch, partials,
                                              input_desc=_describe_input(df))
     if tree_merge:
-        row = merge_partials_tree(partials, sketch, fanin=fanin).collect()[0]
-        blob, n_items = bytes(row.state), int(row.n_items)
+        blob, n_items = fetch_state(
+            merge_partials_tree(partials, sketch, fanin=fanin))
     elif tree_merge is None:
         # a checkpoint read-back repacks many partial files per scan
         # partition, so take P from the pre-checkpoint plan instead
@@ -671,6 +671,17 @@ def merge_shard_partials(partials: DataFrame, sketch,
         merge_final, "shard_id int, n_items long, state binary")
 
 
+def merge_shards_to_blob(partials: DataFrame, sketch,
+                         est_partials: int) -> tuple[bytes, int]:
+    """Shard partials → merge_shard_partials → the dense shard rows, read
+    through Arrow and reassembled into the monolithic blob → (blob, n)."""
+    tbl = merge_shard_partials(partials, sketch, est_partials).toArrow()
+    if tbl.num_rows == 0:
+        return sketch.serialize(sketch.empty()), 0
+    blob = type(sketch).reassemble_shards(tbl.column("state").to_pylist())
+    return blob, sum(tbl.column("n_items").to_pylist())
+
+
 def build_delta_sketch_sharded(df: DataFrame, sketch, col: str, sign_col: str,
                                value_kind: str = "str",
                                n_shards: int | None = None,
@@ -689,11 +700,7 @@ def build_delta_sketch_sharded(df: DataFrame, sketch, col: str, sign_col: str,
     if checkpoint is not None and sketch_id is not None:
         partials = checkpoint.write_shard_partials(
             sketch_id, sketch, partials, input_desc=_describe_input(df))
-    rows = merge_shard_partials(partials, sketch, est_partials=est).collect()
-    if not rows:
-        return sketch.serialize(sketch.empty()), 0
-    blob = type(sketch).reassemble_shards([r.state for r in rows])
-    n_items = int(sum(r.n_items for r in rows))
+    blob, n_items = merge_shards_to_blob(partials, sketch, est)
     if checkpoint is not None and sketch_id is not None:
         checkpoint.write_final(sketch_id, sketch, blob, n_items)
     return blob, n_items

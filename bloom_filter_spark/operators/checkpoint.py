@@ -12,9 +12,12 @@ Table layout (one directory per logical table under ``root``):
                  params_json, input_desc, created_utc
   sketch_final:  sketch_id, kind, n_items, state, params_json, created_utc
 
-Resume = read the persisted partials for a sketch_id and re-run the merge
-tree (the serde + associative merge make resume equivalent to a fresh build
-— reference round-trip invariant, /root/reference/filter/bloom/filter_test.go:187-233).
+Resume = read the latest run's persisted partials and merge them through
+``merge_partials_auto``, the same collect-vs-tree router (and so the same
+fold order) ``build_sketch`` used, so a resume returns the build's bytes even
+for order-sensitive kinds (KLL/t-digest compaction).  Sharded partials merge
+per shard and reassemble, as in ``build_delta_sketch_sharded``.  Whole state
+blobs cross between driver Python and the JVM as Arrow tables both ways.
 """
 
 from __future__ import annotations
@@ -25,9 +28,11 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .merge import merge_partials_tree
+from .build import merge_shards_to_blob
+from .merge import fetch_state, merge_partials_auto
 
 PARTIAL_TABLE_SCHEMA = ("sketch_id string, kind string, level int, partition_id long, "
                         "n_items long, state binary, params_json string, "
@@ -36,7 +41,7 @@ PARTIAL_TABLE_SCHEMA = ("sketch_id string, kind string, level int, partition_id 
 # level sentinel marking SHARDED partial layout in sketch_state: rows are
 # (shard_id-as-partition_id, n_items, column-range state), many rows per id
 # (one per scan partition) — resumed via the per-shard merge + reassembly
-# instead of the fanin tree
+# instead of the partial-state router
 SHARD_LEVEL = -1
 FINAL_TABLE_SCHEMA = ("sketch_id string, kind string, n_items long, state binary, "
                       "params_json string, created_utc double")
@@ -122,11 +127,19 @@ class SketchCheckpoint:
             return os.path.join(base, f"run={f.read().strip()}")
 
     def write_final(self, sketch_id: str, sketch, blob: bytes, n_items: int) -> None:
+        """Append the final state as one row.  The row leaves the driver as
+        an Arrow table, so Spark reads it in the JVM instead of running a
+        Python task over a pickled RDD."""
         spark = SparkSession.getActiveSession()
-        df = spark.createDataFrame(
-            [(sketch_id, sketch.kind, n_items, bytearray(blob),
-              params_json(sketch), time.time())],
-            FINAL_TABLE_SCHEMA)
+        tbl = pa.table({
+            "sketch_id": pa.array([sketch_id], pa.string()),
+            "kind": pa.array([sketch.kind], pa.string()),
+            "n_items": pa.array([n_items], pa.int64()),
+            "state": pa.array([bytes(blob)], pa.binary()),
+            "params_json": pa.array([params_json(sketch)], pa.string()),
+            "created_utc": pa.array([time.time()], pa.float64()),
+        })
+        df = spark.createDataFrame(tbl, FINAL_TABLE_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(
             os.path.join(self._tbl("sketch_final"), f"sketch_id={sketch_id}"))
 
@@ -139,31 +152,24 @@ class SketchCheckpoint:
     # -- read / resume ----------------------------------------------------------
     def read_final(self, spark: SparkSession, sketch_id: str) -> tuple[bytes, int]:
         path = os.path.join(self._tbl("sketch_final"), f"sketch_id={sketch_id}")
-        rows = (spark.read.parquet(path)
-                .orderBy(F.col("created_utc").desc()).limit(1).collect())
-        return bytes(rows[0].state), int(rows[0].n_items)
+        return fetch_state(spark.read.parquet(path)
+                           .orderBy(F.col("created_utc").desc()).limit(1))
 
     def resume(self, spark: SparkSession, sketch_id: str, sketch,
                fanin: int = 64) -> tuple[bytes, int]:
         """Rebuild the final state from the LATEST complete run's partials.
-        Layout auto-detected from the level column: SHARD_LEVEL rows merge
-        per shard and reassemble; monolithic rows run the fanin tree."""
+        One small job reads the row count and the layout (the level column):
+        SHARD_LEVEL rows merge per shard and reassemble; monolithic rows go
+        through merge_partials_auto with the row count as P, the routing
+        build_sketch used, so the resumed blob is the built blob."""
         base = os.path.join(self._tbl("sketch_state"), f"sketch_id={sketch_id}")
         raw = spark.read.parquet(self._latest_run_path(base))
-        if raw.where(F.col("level") == SHARD_LEVEL).limit(1).count():
-            from pyspark.sql import Window
-
-            from .build import merge_shard_partials
-            shards = (raw.where(F.col("level") == SHARD_LEVEL)
-                      .select(F.col("partition_id").cast("int")
-                              .alias("shard_id"),
-                              *(["src"] if "src" in raw.columns else []),
-                              "n_items", "state"))
-            # count jobs run on the PRE-window plan: neither depends on the
-            # synthesized src, and putting them after the window would
-            # re-shuffle/sort every state blob once per count job
-            cnt = shards.count()
-            n_shards = shards.select("shard_id").distinct().count()
+        cnt, level, max_id = raw.agg(F.count(F.lit(1)), F.min("level"),
+                                     F.max("partition_id")).collect()[0]
+        if level == SHARD_LEVEL:
+            shards = raw.select(F.col("partition_id").cast("int").alias("shard_id"),
+                                *(["src"] if "src" in raw.columns else []),
+                                "n_items", "state")
             if "src" not in raw.columns:
                 # legacy (pre-src) checkpoint: the parquet read-back packs
                 # many same-shard rows per partition, so the merge's
@@ -172,21 +178,19 @@ class SketchCheckpoint:
                 # synthesize a distinct per-row src instead.  Ordering by
                 # the state hash is deterministic given distinct blobs;
                 # ties are identical blobs, for which fold order cannot
-                # matter (code-review r5).
+                # matter.
                 w = Window.partitionBy("shard_id").orderBy(
                     F.xxhash64("state"), "n_items")
                 shards = shards.select(
                     "shard_id",
                     (F.row_number().over(w) - 1).cast("long").alias("src"),
                     "n_items", "state")
-            rows = merge_shard_partials(
-                shards, sketch,
-                est_partials=-(-cnt // max(1, n_shards))).collect()
-            blob = type(sketch).reassemble_shards([r.state for r in rows])
-            n = int(sum(r.n_items for r in rows))
+            # every origin partition emits one row per shard 0..max_id
+            blob, n = merge_shards_to_blob(shards, sketch,
+                                           est_partials=-(-cnt // (max_id + 1)))
         else:
-            partials = raw.select("partition_id", "n_items", "state")
-            row = merge_partials_tree(partials, sketch, fanin=fanin).collect()[0]
-            blob, n = bytes(row.state), int(row.n_items)
+            blob, n = merge_partials_auto(
+                raw.select("partition_id", "n_items", "state"), sketch,
+                fanin=fanin, est_rows=cnt)
         self.write_final(sketch_id, sketch, blob, n)
         return blob, n

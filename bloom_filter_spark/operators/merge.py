@@ -58,15 +58,25 @@ def merge_partials_collect(partials: DataFrame, sketch) -> tuple[bytes, int]:
     Correct choice when P × |state| is small (a few hundred MB-scale blobs):
     the tree's extra persist/count/shuffle jobs cost ~0.5-1 s of fixed
     latency each, which dominates short builds and caps scaling efficiency.
-    SURVEY.md §3.1: 'final merge (single task or driver)'.  Rows are folded
-    in partition_id order so the result is reproducible and identical to the
-    tree path for order-sensitive merges (KLL/t-digest compaction).
+    SURVEY.md §3.1: 'final merge (single task or driver)'.  The partial rows
+    cross to the driver as one Arrow table (``toArrow``), not as pickled
+    Rows, and fold in partition_id order whatever order they arrive in, so
+    the result is reproducible for order-sensitive merges (KLL/t-digest
+    compaction).  No rows → the serialized empty state and 0 items.
     """
-    rows = sorted(partials.collect(), key=lambda r: r.partition_id)
-    if not rows:
+    tbl = (partials.select("partition_id", "n_items", "state").toArrow()
+           .sort_by("partition_id"))
+    if tbl.num_rows == 0:
         return sketch.serialize(sketch.empty()), 0
-    return merge_blobs(sketch, [r.state for r in rows],
-                       sum(r.n_items for r in rows))
+    return merge_blobs(sketch, tbl.column("state").to_pylist(),
+                       sum(tbl.column("n_items").to_pylist()))
+
+
+def fetch_state(df: DataFrame) -> tuple[bytes, int]:
+    """The single (n_items, state) row of a fully merged DataFrame, read
+    through Arrow → (blob, n_items)."""
+    tbl = df.select("n_items", "state").toArrow()
+    return tbl.column("state")[0].as_py(), tbl.column("n_items")[0].as_py()
 
 
 # driver fold above this much partial state would strain driver memory —
@@ -76,9 +86,9 @@ AUTO_TREE_THRESHOLD_BYTES = 256 << 20
 
 # Driver-fold budget — decoupled from AUTO_TREE_THRESHOLD_BYTES because the
 # two guard different memories: the tree threshold caps a single MERGE
-# TASK's input (executor memory), while this caps one .collect() on the
-# driver.  A driver comfortably folds a few hundred MB of state blobs in
-# one job (~0.1 s measured for 32 × 8.4 MB), whereas the tree's
+# TASK's input (executor memory), while this caps the partials one driver
+# read-back pulls in.  A driver comfortably folds a few hundred MB of state
+# blobs in one job (~0.1 s measured for 32 × 8.4 MB), whereas the tree's
 # persist/count/level jobs cost seconds of fixed latency — routing
 # mid-sized fleets (256-512 MB of partials) to the tree tripled a 3.8M-key
 # str-build's merge for no memory benefit.  At 1000 executors × 8 MB
@@ -148,9 +158,8 @@ def merge_partials_auto(partials: DataFrame, sketch, fanin: int = 64,
         # budget, so memory per merge task stays bounded no matter how
         # large a single state is
         per_task = max(2, int(task_bytes // max(1, sz)))
-        row = merge_partials_tree(partials, sketch,
-                                  fanin=min(fanin, per_task)).collect()[0]
-        return bytes(row.state), int(row.n_items)
+        return fetch_state(merge_partials_tree(partials, sketch,
+                                               fanin=min(fanin, per_task)))
     return merge_partials_collect(partials, sketch)
 
 

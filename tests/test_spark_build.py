@@ -192,6 +192,86 @@ def test_checkpoint_resume(spark, tokens_df, tmp_path, bloom_blob):
     assert blob3 == direct_blob
 
 
+@pytest.mark.parametrize("sketch", [KLLSketch(KLLParams(k=200)),
+                                    TDigestSketch(TDigestParams(200))],
+                         ids=["kll", "tdigest"])
+def test_resume_order_sensitive_build_returns_build_bytes(spark, tokens_df,
+                                                          tmp_path, sketch):
+    """KLL/t-digest merges are fold-order sensitive, so resume must route
+    the persisted partials the way the build did (driver fold here, not a
+    fanin-2 tree) and return the built blob byte for byte."""
+    ck = SketchCheckpoint(str(tmp_path / "ckpt"))
+    blob, n = build_sketch(tokens_df, sketch, "tokens", "i32_array",
+                           repartition=8, fanin=2, checkpoint=ck,
+                           sketch_id="ordered")
+    resumed, n2 = ck.resume(spark, "ordered", sketch, fanin=2)
+    assert resumed == blob and n2 == n
+
+
+def test_final_table_schema_and_legacy_rows(spark, tmp_path):
+    """sketch_final is pinned to FINAL_TABLE_SCHEMA whichever way the row
+    was written; a final written the old way (createDataFrame from a tuple
+    list) still loads through read_final, and the newest row wins."""
+    from bloom_filter_spark.operators.checkpoint import (FINAL_TABLE_SCHEMA,
+                                                         params_json)
+    sketch = BloomSketch(BloomParams(n=1000, p=0.01))
+    state = sketch.empty()
+    sketch.update_i32(state, np.arange(500, dtype=np.int32))
+    blob = sketch.serialize(state)
+    big_n = 2**31 + 7
+    ck = SketchCheckpoint(str(tmp_path / "ckpt"))
+    path = str(tmp_path / "ckpt" / "sketch_final" / "sketch_id=legacy")
+    spark.createDataFrame(
+        [("legacy", sketch.kind, big_n, bytearray(blob), params_json(sketch),
+          1.0)], FINAL_TABLE_SCHEMA).coalesce(1).write.parquet(path)
+    expected = spark.createDataFrame([], FINAL_TABLE_SCHEMA).schema
+    assert spark.read.parquet(path).schema == expected
+    assert ck.read_final(spark, "legacy") == (blob, big_n)
+
+    ck.write_final("legacy", sketch, sketch.serialize(sketch.empty()), big_n + 1)
+    assert spark.read.parquet(path).schema == expected
+    assert ck.read_final(spark, "legacy") == (
+        sketch.serialize(sketch.empty()), big_n + 1)
+
+    ck.write_final("fresh", sketch, blob, big_n)
+    fresh = spark.read.parquet(
+        str(tmp_path / "ckpt" / "sketch_final" / "sketch_id=fresh"))
+    assert fresh.schema == expected
+    assert ck.read_final(spark, "fresh") == (blob, big_n)
+
+
+def test_merge_partials_collect_folds_in_partition_order(spark):
+    """Partial rows arriving out of partition_id order still fold in
+    partition_id order; no partials → the serialized empty state and 0."""
+    from bloom_filter_spark.operators import PARTIAL_SCHEMA
+    from bloom_filter_spark.operators.merge import merge_partials_collect
+    sketch = KLLSketch(KLLParams(k=16))
+    rng = np.random.default_rng(7)
+    states = []
+    for _ in range(6):
+        st = sketch.empty()
+        sketch.update(st, rng.normal(size=400))
+        states.append(st)
+    blobs = [sketch.serialize(st) for st in states]
+
+    def local_fold(order):
+        acc = KLLSketch.deserialize(blobs[order[0]])[1]
+        for i in order[1:]:
+            acc = sketch.merge(acc, KLLSketch.deserialize(blobs[i])[1])
+        return sketch.serialize(acc)
+
+    arrival = [3, 0, 5, 1, 4, 2]
+    assert local_fold(arrival) != local_fold(sorted(arrival))  # order matters
+    partials = spark.createDataFrame(
+        [(i, 400, bytearray(blobs[i])) for i in arrival],
+        PARTIAL_SCHEMA).coalesce(1)
+    assert merge_partials_collect(partials, sketch) == (
+        local_fold(sorted(arrival)), 6 * 400)
+    empty = spark.createDataFrame([], PARTIAL_SCHEMA)
+    assert merge_partials_collect(empty, sketch) == (
+        sketch.serialize(sketch.empty()), 0)
+
+
 def test_mismatched_params_merge_refused(spark, tokens_df):
     a = build_partials(tokens_df.limit(100), BloomSketch(BloomParams(n=1000, p=0.01)),
                        "tokens", "i32_array", repartition=1)
