@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..core.hashing import StrBuf, arrow_strbuf
 from ..sketches.base import sketch_for_kind
-from .merge import PARTIAL_SCHEMA, fetch_state, merge_partials_tree
+from .merge import PARTIAL_SCHEMA
 
 
 def _flatten_arrays(col: pd.Series) -> np.ndarray:
@@ -54,28 +54,77 @@ def _flatten_arrays(col: pd.Series) -> np.ndarray:
     return np.concatenate(arrs).astype(np.int32, copy=False)
 
 
-def _update(sketch, state, values, value_kind: str) -> int:
+# Sketches whose state never depends on a key's multiplicity (set bits,
+# register maxima): a (key, count) pre-aggregation feeds them the keys alone.
+_WEIGHT_INSENSITIVE_KINDS = frozenset(("bloom", "blocked_bloom", "hll"))
+
+
+def _update(sketch, state, values, value_kind: str, weights=None) -> int:
+    """Fold one batch into ``state`` → the number of items it stands for.
+    ``weights`` are per-value multiplicities (a JVM pre-aggregation's
+    counts): the weight-insensitive kinds drop them, sketches with an
+    ``update_weighted`` take them there, and the rest (CMS) take them as
+    ``update_{value_kind}(..., weights=)`` — the same updater as unweighted."""
     if len(values) == 0:
         return 0
+    n, kw = len(values), {}
+    if weights is not None:
+        n = int(weights.sum())
+        if hasattr(sketch, "update_weighted"):
+            sketch.update_weighted(state, values, weights)
+            return n
+        if sketch.kind not in _WEIGHT_INSENSITIVE_KINDS:
+            kw = {"weights": weights}
     if value_kind == "i32":
-        sketch.update_i32(state, np.asarray(values, np.int32))
+        sketch.update_i32(state, np.asarray(values, np.int32), **kw)
     elif value_kind == "i64":
         if hasattr(sketch, "update_i64"):
-            sketch.update_i64(state, np.asarray(values, np.int64))
+            sketch.update_i64(state, np.asarray(values, np.int64), **kw)
         elif hasattr(sketch, "update"):  # quantile sketches take floats
-            sketch.update(state, np.asarray(values, np.float64))
+            sketch.update(state, np.asarray(values, np.float64), **kw)
         else:
             raise ValueError(f"{sketch.kind} does not support i64 values")
     elif value_kind == "f64":
-        sketch.update(state, np.asarray(values, np.float64))
+        sketch.update(state, np.asarray(values, np.float64), **kw)
     elif value_kind == "str":
         if isinstance(values, StrBuf):  # zero-copy Arrow path, nulls dropped
-            sketch.update_str(state, values)
+            sketch.update_str(state, values, **kw)
         else:
-            sketch.update_str(state, [v for v in values if v is not None])
+            sketch.update_str(state, [v for v in values if v is not None], **kw)
     else:
         raise ValueError(f"unknown value_kind {value_kind}")
-    return len(values)
+    return n
+
+
+def _partial_row(sketch, state, n: int):
+    """The one (partition_id, n_items, state) row a single-sketch fold task
+    emits."""
+    import pyarrow as pa
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx is not None else 0
+    return pa.RecordBatch.from_pydict({
+        "partition_id": pa.array([pid], pa.int64()),
+        "n_items": pa.array([n], pa.int64()),
+        "state": pa.array([sketch.serialize(state)], pa.binary()),
+    })
+
+
+def _partial_fold(sketch, value_kind: str, weighted: bool = False):
+    """mapInArrow body of every single-sketch build: fold all of a task's
+    batches — column 0 the values, column 1 their weights when ``weighted``
+    — into one state, emitted as one partial row."""
+    elem_kind = "i32" if value_kind == "i32_array" else value_kind
+
+    def fold(batches):
+        state = sketch.empty()
+        n = 0
+        for b in batches:
+            w = b.column(1).to_numpy(zero_copy_only=False) if weighted else None
+            n += _update(sketch, state, _arrow_values(b.column(0), value_kind),
+                         elem_kind, w)
+        yield _partial_row(sketch, state, n)
+
+    return fold
 
 
 def _arrow_values(col, value_kind: str):
@@ -143,7 +192,9 @@ def _attr_through_projects(df: DataFrame, cols: list[str]):
     plan is nothing but attribute-preserving Projects over ONE v1 parquet
     relation — the shape where a Python task can read the files directly.
     Any other node (Filter, Limit, Join, generated columns, non-parquet or
-    remote storage) returns None and the caller keeps the JVM scan path."""
+    remote storage) returns None and the caller keeps the JVM scan path.
+    A JVM-side error in the walk declines too; a Python error propagates."""
+    from py4j.protocol import Py4JError
     try:
         node = df._jdf.queryExecution().optimizedPlan()
         names = list(cols)
@@ -186,7 +237,7 @@ def _attr_through_projects(df: DataFrame, cols: list[str]):
                 return names, files
             else:
                 return None
-    except Exception:
+    except Py4JError:
         return None
 
 
@@ -199,14 +250,13 @@ def _parquet_splits(spark, files: list[str], need_cols: list[str],
     round-robin splits.  Returns list[dict[file, [rg,...]]] or None."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from .merge import AUTO_TREE_THRESHOLD_BYTES
     units: list[tuple[str, int]] = []
     for f in files:
         if not os.path.exists(f):
             return None
         try:
             pf = pq.ParquetFile(f)
-        except Exception:
+        except (OSError, pa.ArrowInvalid):  # unreadable or not parquet
             return None
         schema = pf.schema_arrow
         for c in need_cols:
@@ -275,51 +325,60 @@ def _iter_rg_tables(split: dict, cols: list[str], lookahead: int = 2):
             yield t
 
 
-def _native_parquet_partials(df: DataFrame, sketch, col: str,
-                             value_kind: str) -> DataFrame | None:
-    """Native-scan build: Python tasks read the parquet row groups directly
+def _native_scan(df: DataFrame, cols: list[str], sketch,
+                 need_types: dict[str, str] | None = None):
+    """Native-scan source: Python tasks read the parquet row groups directly
     with pyarrow (vectorized C++ decode, zero JVM row↔Arrow transposition)
-    and fold them through the same kernels — measured ~25× less CPU than the
-    JVM scan → Arrow exchange for the same bytes (guide §4.2: keep the heavy
-    lifting in native code; the JVM boundary was ~90% of every build line's
-    CPU).  Only taken when the plan is provably a bare projected parquet
-    scan and the sketch's merged state is partition-independent, so the
-    final blob is bit-identical to the JVM path."""
-    if sketch.kind not in _PARTITION_DETERMINISTIC_KINDS:
+    — measured ~25× less CPU than the JVM scan → Arrow exchange for the same
+    bytes (guide §4.2: keep the heavy lifting in native code; the JVM
+    boundary was ~90% of every build line's CPU).  Only taken when the plan
+    is provably a bare projected parquet scan of ``cols`` (each a distinct
+    physical column, with the Arrow types ``need_types`` asks for) and —
+    when a ``sketch`` is given — its merged state is partition-independent,
+    so every result is bit-identical to the JVM path.
+
+    → ``(driver, read)``: ``driver`` is a ``spark.range`` with one row per
+    split, and ``read`` turns one task's split-id batches into RecordBatches
+    of ``cols`` in order; or None, and the caller keeps the JVM scan."""
+    if sketch is not None and sketch.kind not in _PARTITION_DETERMINISTIC_KINDS:
         return None
-    info = _attr_through_projects(df, [col])
+    info = _attr_through_projects(df, cols)
     if info is None:
         return None
-    (phys_col,), files = info
-    spark = df.sparkSession
+    phys, files = info
+    if len(set(phys)) < len(phys):
+        return None
+    need_types = need_types or {}
     from .merge import state_size_estimate
-    splits = _parquet_splits(spark, files, [phys_col],
-                             state_bytes=state_size_estimate(sketch))
+    spark = df.sparkSession
+    splits = _parquet_splits(
+        spark, files, phys,
+        need_types={p: need_types[c] for c, p in zip(cols, phys) if c in need_types},
+        state_bytes=None if sketch is None else state_size_estimate(sketch))
     if splits is None:
         return None
     bc = spark.sparkContext.broadcast(splits)
-    elem_kind = "i32" if value_kind == "i32_array" else value_kind
 
-    def partial_fn(batches):
+    def read(batches):
         import pyarrow as pa
-        state = sketch.empty()
-        n = 0
         for b in batches:
             for sid in b.column(0).to_pylist():
-                for t in _iter_rg_tables(bc.value[sid], [phys_col]):
-                    arr = t.column(0).combine_chunks()
-                    vals = _arrow_values(arr, value_kind)
-                    n += _update(sketch, state, vals, elem_kind)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array([pid], pa.int64()),
-            "n_items": pa.array([n], pa.int64()),
-            "state": pa.array([sketch.serialize(state)], pa.binary()),
-        })
+                for t in _iter_rg_tables(bc.value[sid], phys):
+                    yield pa.RecordBatch.from_arrays(
+                        [t.column(c).combine_chunks() for c in phys], phys)
 
-    driver = spark.range(0, len(splits), 1, len(splits))
-    return driver.mapInArrow(partial_fn, PARTIAL_SCHEMA)
+    return spark.range(0, len(splits), 1, len(splits)), read
+
+
+def _native_partials(df: DataFrame, sketch, col: str,
+                     value_kind: str) -> DataFrame | None:
+    """The single-sketch fold over the native scan of ``col``, or None."""
+    src = _native_scan(df, [col], sketch)
+    if src is None:
+        return None
+    driver, read = src
+    fold = _partial_fold(sketch, value_kind)
+    return driver.mapInArrow(lambda batches: fold(read(batches)), PARTIAL_SCHEMA)
 
 
 def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
@@ -331,25 +390,13 @@ def build_partials(df: DataFrame, sketch, col: str, value_kind: str = "i32_array
         sel = sel.repartition(repartition)
     else:
         sel = _bound_state_volume(sel, sketch)
+    return sel.mapInArrow(_partial_fold(sketch, value_kind), PARTIAL_SCHEMA)
 
-    elem_kind = "i32" if value_kind == "i32_array" else value_kind
 
-    def partial_fn(batches):
-        import pyarrow as pa
-        state = sketch.empty()
-        n = 0
-        for b in batches:
-            vals = _arrow_values(b.column(0), value_kind)
-            n += _update(sketch, state, vals, elem_kind)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array([pid], pa.int64()),
-            "n_items": pa.array([n], pa.int64()),
-            "state": pa.array([sketch.serialize(state)], pa.binary()),
-        })
-
-    return sel.mapInArrow(partial_fn, PARTIAL_SCHEMA)
+# Kinds a (key, count) pre-aggregation feeds exactly: the weight-insensitive
+# sets, and weight-additive counters and quantile summaries.
+_PREAGG_KINDS = _WEIGHT_INSENSITIVE_KINDS | {"cms", "tdigest", "kll", "mg",
+                                             "ddsketch"}
 
 
 def build_sketch_preagg(df: DataFrame, sketch, col: str,
@@ -364,6 +411,9 @@ def build_sketch_preagg(df: DataFrame, sketch, col: str,
     domain — for zipfian token streams that is a ~3000× reduction.  n_items
     still counts every ingested token (sum of weights).
     """
+    if sketch.kind not in _PREAGG_KINDS:
+        raise ValueError(f"pre-aggregated build unsupported for {sketch.kind}")
+    from .merge import merge_partials_auto
     # The JVM pre-aggregation exists to shrink the JVM→Python boundary
     # (Python sees only the distinct domain).  Under a native parquet scan
     # there IS no boundary — and for the partition-deterministic kinds the
@@ -372,99 +422,47 @@ def build_sketch_preagg(df: DataFrame, sketch, col: str,
     # n_items still the total ingested weight.  Route those there; sketches
     # whose state depends on the (key, weight) stream shape (t-digest, KLL,
     # MG, DDSketch) keep the JVM pre-aggregation below.
-    if sketch.kind in ("bloom", "blocked_bloom", "hll", "cms"):
-        partials = _native_parquet_partials(df, sketch, col, value_kind)
-        if partials is not None:
-            from .merge import merge_partials_auto
-            return merge_partials_auto(
-                partials, sketch, fanin=fanin,
-                est_rows=partials.rdd.getNumPartitions())
-    if value_kind == "i32_array":
-        flat = df.select(F.explode(F.col(col)).alias("v"))
-    else:
-        flat = df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
-    counts = flat.groupBy("v").agg(F.count("*").alias("cnt"))
-    if shuffle_partitions:
-        counts = counts.repartition(shuffle_partitions)
-
-    supports_weights = sketch.kind in ("cms", "tdigest", "kll", "mg", "ddsketch")
-    elem_kind = "i32" if value_kind == "i32_array" else value_kind
-
-    def partial_fn(batches):
-        import pyarrow as pa
-        state = sketch.empty()
-        n = 0
-        for b in batches:
-            vals = _arrow_values(b.column(0), elem_kind if elem_kind != "i32" else "i32")
-            w = b.column(1).to_numpy(zero_copy_only=False)
-            if len(vals) == 0:
-                continue
-            if sketch.kind == "cms":
-                getattr(sketch, f"update_{'str' if elem_kind == 'str' else 'i32'}")(
-                    state, vals, weights=w)
-            elif sketch.kind in ("kll", "ddsketch"):
-                sketch.update_weighted(state, np.asarray(vals, np.float64), w)
-            elif sketch.kind == "mg":
-                sketch.update_weighted(state, np.asarray(vals, np.int64), w)
-            elif sketch.kind == "tdigest":
-                state.vmin = min(state.vmin, float(np.min(vals)))
-                state.vmax = max(state.vmax, float(np.max(vals)))
-                state.n += int(w.sum())
-                means = np.concatenate([state.means, np.asarray(vals, np.float64)])
-                weights = np.concatenate([state.weights, w.astype(np.float64)])
-                state.means, state.weights = sketch._compress(means, weights)
-            else:  # weight-insensitive: bloom / blocked_bloom / hll
-                _update(sketch, state, vals, elem_kind)
-            n += int(w.sum())
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array([pid], pa.int64()),
-            "n_items": pa.array([n], pa.int64()),
-            "state": pa.array([sketch.serialize(state)], pa.binary()),
-        })
-
-    if not supports_weights and sketch.kind not in ("bloom", "blocked_bloom", "hll"):
-        raise ValueError(f"pre-aggregated build unsupported for {sketch.kind}")
-    from .merge import merge_partials_auto
-    partials = counts.mapInArrow(partial_fn, PARTIAL_SCHEMA)
-    return merge_partials_auto(partials, sketch)
+    partials = _native_partials(df, sketch, col, value_kind)
+    if partials is None:
+        v = F.explode(F.col(col)) if value_kind == "i32_array" else F.col(col)
+        # null keys are not insertable, and a dropped null value would
+        # misalign the weights column
+        counts = (df.select(v.alias("v")).where(F.col("v").isNotNull())
+                  .groupBy("v").agg(F.count("*").alias("cnt")))
+        if shuffle_partitions:
+            counts = counts.repartition(shuffle_partitions)
+        elem_kind = "i32" if value_kind == "i32_array" else value_kind
+        partials = counts.mapInArrow(
+            _partial_fold(sketch, elem_kind, weighted=True), PARTIAL_SCHEMA)
+    return merge_partials_auto(partials, sketch, fanin=fanin)
 
 
 def build_sketch(df: DataFrame, sketch, col: str, value_kind: str = "i32_array",
                  repartition: int | None = None, fanin: int = 64,
-                 checkpoint=None, sketch_id: str | None = None,
-                 tree_merge: bool | None = None) -> tuple[bytes, int]:
+                 checkpoint=None, sketch_id: str | None = None) -> tuple[bytes, int]:
     """Full build: partials → merge → (final state blob, n_items).
 
-    Merge strategy: AUTO by default — driver-side fold (one job) while
-    P × |state| stays under merge.AUTO_TREE_THRESHOLD_BYTES, the fanin-ary
+    Merge strategy: merge_partials_auto — driver-side fold (one job) while
+    P × |state| stays under merge.DRIVER_COLLECT_MAX_BYTES, the fanin-ary
     applyInPandas tree beyond it (thousands of GB-scale Bloom partials must
-    never be collect()ed).  ``tree_merge=True``/``False`` forces a path.
-    If ``checkpoint`` and ``sketch_id`` are given, partial and final states
-    are persisted with lineage — resumable builds.
+    never be collect()ed).  If ``checkpoint`` and ``sketch_id`` are given,
+    partial and final states are persisted with lineage — resumable builds.
     """
-    from .merge import merge_partials_auto, merge_partials_collect
+    from .merge import merge_partials_auto
     partials = None
     if repartition is None:
-        partials = _native_parquet_partials(df, sketch, col, value_kind)
+        partials = _native_partials(df, sketch, col, value_kind)
     if partials is None:
         partials = build_partials(df, sketch, col, value_kind, repartition)
     partials_direct = partials  # one partial ROW per partition of THIS plan
     if checkpoint is not None and sketch_id is not None:
         partials = checkpoint.write_partials(sketch_id, sketch, partials,
                                              input_desc=_describe_input(df))
-    if tree_merge:
-        blob, n_items = fetch_state(
-            merge_partials_tree(partials, sketch, fanin=fanin))
-    elif tree_merge is None:
-        # a checkpoint read-back repacks many partial files per scan
-        # partition, so take P from the pre-checkpoint plan instead
-        blob, n_items = merge_partials_auto(
-            partials, sketch, fanin=fanin,
-            est_rows=partials_direct.rdd.getNumPartitions())
-    else:
-        blob, n_items = merge_partials_collect(partials, sketch)
+    # a checkpoint read-back repacks many partial files per scan
+    # partition, so take P from the pre-checkpoint plan instead
+    blob, n_items = merge_partials_auto(
+        partials, sketch, fanin=fanin,
+        est_rows=partials_direct.rdd.getNumPartitions())
     if checkpoint is not None and sketch_id is not None:
         checkpoint.write_final(sketch_id, sketch, blob, n_items)
     return blob, n_items
@@ -498,7 +496,6 @@ def build_delta_partials(df: DataFrame, sketch, col: str, sign_col: str,
         raise ValueError(f"{sketch.kind} does not support signed updates")
 
     def partial_fn(batches):
-        import pyarrow as pa
         state = sketch.empty()
         n = 0
         for b in batches:
@@ -507,13 +504,7 @@ def build_delta_partials(df: DataFrame, sketch, col: str, sign_col: str,
             if len(vals):
                 getattr(sketch, updater)(state, vals, signs)
                 n += len(vals)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict({
-            "partition_id": pa.array([pid], pa.int64()),
-            "n_items": pa.array([n], pa.int64()),
-            "state": pa.array([sketch.serialize(state)], pa.binary()),
-        })
+        yield _partial_row(sketch, state, n)
 
     return sel.mapInArrow(partial_fn, PARTIAL_SCHEMA)
 
@@ -757,73 +748,29 @@ def _describe_input(df: DataFrame) -> str:
 GROUPED_SCHEMA = "group string, n_items long, state binary"
 
 
-def _native_grouped_partials(df: DataFrame, sketch, group_col: str, col: str,
-                             value_kind: str) -> DataFrame | None:
-    """Map-side grouped build over a NATIVE parquet scan: Python tasks read
-    (group, values) row groups directly and fold them through the exact
-    phase-1 kernel the JVM-fed path uses — same per-group partial semantics,
-    none of the JVM row↔Arrow transposition.  Eligibility mirrors
-    _native_parquet_partials, plus the group column must already be a
-    parquet string column (the plan-side cast("string") must be an
-    identity for the fold to see identical labels)."""
-    if sketch.kind not in _PARTITION_DETERMINISTIC_KINDS:
-        return None
-    info = _attr_through_projects(df, [group_col, col])
-    if info is None:
-        return None
-    (g_phys, v_phys), files = info
-    if g_phys == v_phys:
-        return None
-    spark = df.sparkSession
-    from .merge import state_size_estimate
-    splits = _parquet_splits(spark, files, [g_phys, v_phys],
-                             need_types={g_phys: "string"},
-                             state_bytes=state_size_estimate(sketch))
-    if splits is None:
-        return None
-    bc = spark.sparkContext.broadcast(splits)
-    array_input = value_kind == "i32_array"
-    elem_kind = "i32" if array_input else value_kind
-    phase1 = _grouped_phase1_fn(sketch, array_input, elem_kind, 1)
-
-    def native_fn(batches):
-        import pyarrow as pa
-
-        def rg_batches():
-            for b in batches:
-                for sid in b.column(0).to_pylist():
-                    for t in _iter_rg_tables(bc.value[sid],
-                                             [g_phys, v_phys]):
-                        yield pa.RecordBatch.from_arrays(
-                            [t.column(g_phys).combine_chunks(),
-                             t.column(v_phys).combine_chunks()],
-                            ["group", "v"])
-
-        yield from phase1(rg_batches())
-
-    driver = spark.range(0, len(splits), 1, len(splits))
-    return driver.mapInArrow(native_fn, GROUPED_SCHEMA)
-
-
-def _grouped_phase1_fn(sketch, array_input: bool, elem_kind: str,
-                       value_col_idx: int):
+def _grouped_phase1_fn(sketch, value_kind: str):
     """Arrow-native grouped partial pass shared by the map-side and salted
-    strategies: dictionary-encode the group labels, bucket token values by
+    strategies over (group, v) batches — native scan or JVM-fed alike:
+    dictionary-encode the group labels, bucket token values by
     np.repeat of the label codes, fold one sketch state per group seen —
     no pandas object columns, no per-row Python (string values are filtered
     group-by-group with Arrow compute, not a zip loop)."""
+    array_input = value_kind == "i32_array"
+    elem_kind = "i32" if array_input else value_kind
 
     def phase1(batches):
         import pyarrow as pa
+        import pyarrow.compute as pc
         states: dict[str, list] = {}
         for b in batches:
+            if not array_input and b.column(1).null_count:
+                b = b.filter(pc.is_valid(b.column(1)))  # nulls not insertable
             enc = b.column(0).dictionary_encode()
             codes = enc.indices.to_numpy(zero_copy_only=False)
             groups = enc.dictionary.to_pylist()
-            vcol = b.column(value_col_idx)
+            vcol = b.column(1)
             str_input = elem_kind == "str" and not array_input
             if array_input:
-                import pyarrow.compute as pc
                 # list_value_length is null for null rows; flatten() skips
                 # them, so zero-fill keeps owner/flat aligned
                 lengths = pc.list_value_length(vcol).fill_null(0) \
@@ -931,25 +878,28 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
     Right when the group domain is too large for G × |state| to sit in one
     task's memory, at the price of shuffling the full data once.
     """
-    array_input = value_kind == "i32_array"
-    elem_kind = "i32" if array_input else value_kind
     phase2 = _grouped_phase2_fn(sketch)
 
     if strategy == "auto":
         strategy, _ = _choose_grouped_strategy(df, sketch, group_col,
                                                group_cardinality)
 
+    phase1 = _grouped_phase1_fn(sketch, value_kind)
     if strategy == "mapside":
-        partials = None
-        if not num_partitions:
-            partials = _native_grouped_partials(df, sketch, group_col, col,
-                                                value_kind)
-        if partials is None:
+        # the native scan needs the group column already a parquet string
+        # column: the plan-side cast("string") must be an identity for the
+        # fold to see identical labels
+        src = None if num_partitions else _native_scan(
+            df, [group_col, col], sketch, need_types={group_col: "string"})
+        if src is not None:
+            driver, read = src
+            partials = driver.mapInArrow(
+                lambda batches: phase1(read(batches)), GROUPED_SCHEMA)
+        else:
             base = df.select(F.col(group_col).cast("string").alias("group"),
                              F.col(col).alias("v"))
             if num_partitions:
                 base = base.repartition(num_partitions)
-            phase1 = _grouped_phase1_fn(sketch, array_input, elem_kind, 1)
             partials = base.mapInArrow(phase1, GROUPED_SCHEMA)
         return partials.groupBy("group").applyInPandas(phase2, GROUPED_SCHEMA)
 
@@ -964,82 +914,7 @@ def build_grouped(df: DataFrame, sketch, group_col: str, col: str,
     )
     shuffled = base.repartition(num_partitions, "group", "salt") if num_partitions \
         else base.repartition("group", "salt")
-    phase1 = _grouped_phase1_fn(sketch, array_input, elem_kind, 2)
-    partials = shuffled.mapInArrow(phase1, GROUPED_SCHEMA)
-    return partials.groupBy("group").applyInPandas(phase2, GROUPED_SCHEMA)
-
-
-def build_grouped_preagg(df: DataFrame, sketch, group_col: str, col: str,
-                         value_kind: str = "i32_array") -> DataFrame:
-    """Grouped build through a JVM partial aggregation — the skew-proof path
-    for modest key domains.
-
-    explode → groupBy(group, key).count(): the shuffle keys are (group, key)
-    PAIRS, uniformly hashed, so a 45 %-heavy group spreads over the whole
-    cluster with no salting at all; Python then sees only the per-group
-    distinct domain with weights.  Exact for weight-insensitive sketches
-    (Bloom/HLL) and weight-additive ones (CMS/t-digest).
-    → DataFrame(group string, n_items long, state binary).
-    """
-    if sketch.kind not in ("bloom", "blocked_bloom", "hll", "cms", "tdigest",
-                           "kll", "ddsketch"):
-        raise ValueError(f"pre-aggregated grouped build unsupported for {sketch.kind}")
-    elem_kind = "i32" if value_kind == "i32_array" else value_kind
-    v = F.explode(F.col(col)) if value_kind == "i32_array" else F.col(col)
-    flat = (df.select(F.col(group_col).cast("string").alias("group"), v.alias("v"))
-            .where(F.col("v").isNotNull()))  # null keys are not insertable
-    counts = flat.groupBy("group", "v").agg(F.count("*").alias("cnt"))
-
-    def phase1(batches):
-        import pyarrow as pa
-        states: dict[str, list] = {}
-        for b in batches:
-            enc = b.column(0).dictionary_encode()
-            codes = enc.indices.to_numpy(zero_copy_only=False)
-            groups = enc.dictionary.to_pylist()
-            vals_all = (b.column(1) if elem_kind == "str"
-                        else b.column(1).to_numpy(zero_copy_only=False))
-            w_all = b.column(2).to_numpy(zero_copy_only=False)
-            for gi, gname in enumerate(groups):
-                mask = codes == gi
-                if elem_kind == "str":
-                    vals = vals_all.filter(pa.array(mask)).to_pylist()
-                else:
-                    vals = vals_all[mask]
-                w = w_all[mask]
-                if gname not in states:
-                    states[gname] = [sketch.empty(), 0]
-                st, _ = states[gname][0], None
-                if sketch.kind == "cms":
-                    getattr(sketch, f"update_{'str' if elem_kind == 'str' else 'i32'}")(
-                        st, vals, weights=w)
-                elif sketch.kind in ("kll", "ddsketch"):
-                    sketch.update_weighted(st, np.asarray(vals, np.float64), w)
-                elif sketch.kind == "tdigest":
-                    arr = np.asarray(vals, np.float64)
-                    st.vmin = min(st.vmin, float(arr.min()))
-                    st.vmax = max(st.vmax, float(arr.max()))
-                    st.n += int(w.sum())
-                    means = np.concatenate([st.means, arr])
-                    weights = np.concatenate([st.weights, w.astype(np.float64)])
-                    st.means, st.weights = sketch._compress(means, weights)
-                else:
-                    _update(sketch, st, vals, elem_kind)
-                states[gname][1] += int(w.sum())
-        yield pa.RecordBatch.from_pydict({
-            "group": pa.array(list(states.keys()), pa.string()),
-            "n_items": pa.array([s[1] for s in states.values()], pa.int64()),
-            "state": pa.array([sketch.serialize(s[0]) for s in states.values()],
-                              pa.binary()),
-        })
-
-    def phase2(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .merge import merge_blobs
-        blob, n = merge_blobs(sketch, list(pdf["state"]), pdf["n_items"].sum())
-        return pd.DataFrame({"group": [pdf["group"].iloc[0]], "n_items": [n],
-                             "state": [blob]})
-
-    partials = counts.mapInArrow(phase1, GROUPED_SCHEMA)
+    partials = shuffled.select("group", "v").mapInArrow(phase1, GROUPED_SCHEMA)
     return partials.groupBy("group").applyInPandas(phase2, GROUPED_SCHEMA)
 
 

@@ -127,11 +127,10 @@ def state_size_estimate(sketch) -> int:
 
 
 def merge_partials_auto(partials: DataFrame, sketch, fanin: int = 64,
-                        threshold_bytes: int | None = None,
                         est_rows: int | None = None) -> tuple[bytes, int]:
-    """Merge-strategy router: driver fold when P × |state| is small, the
-    fanin-ary executor tree when collecting the partials would blow the
-    driver (the caller no longer has to remember a flag at 1000-executor
+    """Merge-strategy router: driver fold when P × |state| fits the driver
+    budget (DRIVER_COLLECT_MAX_BYTES), the fanin-ary executor tree beyond
+    it (the caller no longer has to remember a flag at 1000-executor
     scale).  ``est_rows`` should be the partial-ROW count when the caller
     knows it (build_sketch passes the pre-checkpoint partition count —
     a checkpoint read-back packs many partial files per scan partition, so
@@ -140,24 +139,13 @@ def merge_partials_auto(partials: DataFrame, sketch, fanin: int = 64,
     if est_rows is None:
         est_rows = partials.rdd.getNumPartitions()
     sz = state_size_estimate(sketch)
-    # default (None): route collect-vs-tree on the DRIVER budget
-    # (DRIVER_COLLECT_MAX_BYTES) and cap each tree task at the executor
-    # budget (AUTO_TREE_THRESHOLD_BYTES).  An explicit threshold_bytes
-    # keeps its historical single-knob meaning for BOTH — tests force the
-    # tree with 0 — and a sentinel of None (not default-value equality)
-    # distinguishes the cases, so passing the default constant explicitly
-    # behaves identically to passing it implicitly (code-review r5).
-    if threshold_bytes is None:
-        route_bytes, task_bytes = DRIVER_COLLECT_MAX_BYTES, AUTO_TREE_THRESHOLD_BYTES
-    else:
-        route_bytes = task_bytes = threshold_bytes
-    if est_rows * sz > route_bytes:
+    if est_rows * sz > DRIVER_COLLECT_MAX_BYTES:
         # byte-aware fanin: a WIDE state (e.g. a 33 MB counting-bloom
         # counter array) with the default fanin=64 would funnel 2+ GB into
         # ONE merge task; cap each task's input at the executor byte
-        # budget, so memory per merge task stays bounded no matter how
-        # large a single state is
-        per_task = max(2, int(task_bytes // max(1, sz)))
+        # budget (AUTO_TREE_THRESHOLD_BYTES), so memory per merge task
+        # stays bounded no matter how large a single state is
+        per_task = max(2, int(AUTO_TREE_THRESHOLD_BYTES // max(1, sz)))
         return fetch_state(merge_partials_tree(partials, sketch,
                                                fanin=min(fanin, per_task)))
     return merge_partials_collect(partials, sketch)

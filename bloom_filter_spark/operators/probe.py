@@ -198,40 +198,6 @@ def membership_scan(df, col: str, spark: SparkSession, blob: bytes, kind: str,
             member = sk.contains_i32(state, np.asarray(vals, np.int32))
         return len(member), int(member.sum())
 
-    # native-scan fast path (same eligibility rules as the build side): a
-    # bare projected parquet scan is read row-group-by-row-group with
-    # pyarrow inside the Python tasks — no JVM row↔Arrow transposition,
-    # identical (n_probed, n_member) totals from the same probe kernel
-    from .build import _attr_through_projects, _parquet_splits
-    info = _attr_through_projects(df.select(col), [col])
-    if info is not None:
-        (phys_col,), files = info
-        splits = _parquet_splits(spark, files, [phys_col])
-        if splits is not None:
-            splits_bc = spark.sparkContext.broadcast(splits)
-
-            def native_scan(batches):
-                import pyarrow as pa
-                from .build import _iter_rg_tables
-                sk, state = _get(bc, key)
-                n = hits = 0
-                for b in batches:
-                    for sid in b.column(0).to_pylist():
-                        for t in _iter_rg_tables(splits_bc.value[sid],
-                                                 [phys_col]):
-                            arr = t.column(0).combine_chunks()
-                            dn, dh = _probe_arrow_column(sk, state, arr)
-                            n += dn
-                            hits += dh
-                yield pa.RecordBatch.from_pydict({
-                    "n_probed": pa.array([n], pa.int64()),
-                    "n_member": pa.array([hits], pa.int64()),
-                })
-
-            driver = spark.range(0, len(splits), 1, len(splits))
-            return driver.mapInArrow(native_scan,
-                                     "n_probed long, n_member long")
-
     def scan(batches):
         import pyarrow as pa
         sk, state = None, None
@@ -247,6 +213,16 @@ def membership_scan(df, col: str, spark: SparkSession, blob: bytes, kind: str,
             "n_member": pa.array([hits], pa.int64()),
         })
 
+    # native-scan fast path (same eligibility rules as the build side): a
+    # bare projected parquet scan is read row-group-by-row-group with
+    # pyarrow inside the Python tasks — no JVM row↔Arrow transposition,
+    # identical (n_probed, n_member) totals from the same probe kernel
+    from .build import _native_scan
+    src = _native_scan(df.select(col), [col], None)
+    if src is not None:
+        driver, read = src
+        return driver.mapInArrow(lambda batches: scan(read(batches)),
+                                 "n_probed long, n_member long")
     return df.select(col).mapInArrow(scan, "n_probed long, n_member long")
 
 

@@ -1,18 +1,21 @@
 """HyperLogLog — distinct-count sketch (north-rule extension, not in the
 reference; SURVEY.md §2.7).
 
-Flajolet–Fuss–Gandouet–Meunier 2007, with the 64-bit-hash variant used by
-modern implementations (no large-range correction needed) and the standard
-small-range linear-counting correction.  State: m = 2^b uint8 registers.
+Flajolet–Fuss–Gandouet–Meunier 2007 registers over a 64-bit hash, read
+by Ertl's improved estimator (arXiv:1702.01284, Alg. 6), which is unbiased
+across the whole range with no empirical bias tables and no switch between
+linear counting and the raw estimate.  State: m = 2^b uint8 registers.
 
   register index = top b bits of the 64-bit hash
-  rank           = leading zeros of the remaining 64-b bits + 1
+  rank           = leading zeros of the remaining q = 64-b bits + 1 (≤ q+1)
   merge          = element-wise max (associative, commutative, idempotent)
-  estimate       = alpha_m · m² / Σ 2^-reg   (± 1.04/√m std error)
+  estimate       = m² / (2 ln 2 · z), z from the register histogram
+                   (± 1.04/√m std error)
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -38,14 +41,32 @@ class HLLParams:
         return 1.04 / (self.m ** 0.5)
 
 
-def _alpha(m: int) -> float:
-    if m == 16:
-        return 0.673
-    if m == 32:
-        return 0.697
-    if m == 64:
-        return 0.709
-    return 0.7213 / (1.0 + 1.079 / m)
+def _sigma(x: float) -> float:
+    """σ(x) = x + Σ_k x^(2^k) 2^(k-1) — the all-zero-register correction."""
+    if x == 1.0:
+        return float("inf")
+    y, z = 1.0, x
+    while True:
+        x *= x
+        z_old, z = z, z + x * y
+        y += y
+        if z == z_old:
+            return z
+
+
+def _tau(x: float) -> float:
+    """τ(x) = (1 - x - Σ_k (1 - x^(2^-k))² 2^-k) / 3 — the saturated-
+    register correction."""
+    if x == 0.0 or x == 1.0:
+        return 0.0
+    y, z = 1.0, 1.0 - x
+    while True:
+        x = math.sqrt(x)
+        z_old = z
+        y *= 0.5
+        z -= (1.0 - x) ** 2 * y
+        if z == z_old:
+            return z / 3.0
 
 
 @register
@@ -84,13 +105,14 @@ class HLLSketch:
         return np.maximum(a, b)
 
     def estimate(self, state: np.ndarray) -> float:
+        q = 64 - self.params.b
         m = float(self.params.m)
-        raw = _alpha(self.params.m) * m * m / np.power(2.0, -state.astype(np.float64)).sum()
-        if raw <= 2.5 * m:
-            zeros = int((state == 0).sum())
-            if zeros:
-                return m * np.log(m / zeros)  # linear counting
-        return float(raw)
+        c = np.bincount(state, minlength=q + 2).tolist()
+        z = m * _tau(1.0 - c[q + 1] / m)
+        for k in range(q, 0, -1):
+            z = 0.5 * (z + c[k])
+        z += m * _sigma(c[0] / m)
+        return m * m / (2.0 * math.log(2.0) * z)
 
     def serialize(self, state: np.ndarray) -> bytes:
         """LE u32 b | u64 seed | u8 mode | payload.

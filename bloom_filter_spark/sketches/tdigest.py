@@ -78,14 +78,23 @@ class TDigestSketch:
 
     def update(self, state: TDigestState, values: np.ndarray) -> None:
         vals = np.asarray(values, np.float64)
-        vals = vals[~np.isnan(vals)]
+        self.update_weighted(state, vals, np.ones(vals.size, np.int64))
+
+    def update_weighted(self, state: TDigestState, values: np.ndarray,
+                        weights: np.ndarray) -> None:
+        """Insert each value with an integer weight (its multiplicity) as
+        one weighted point; NaN values are dropped with their weights."""
+        vals = np.asarray(values, np.float64)
+        w = np.asarray(weights, np.int64)
+        keep = ~np.isnan(vals)
+        vals, w = vals[keep], w[keep]
         if vals.size == 0:
             return
         state.vmin = min(state.vmin, float(vals.min()))
         state.vmax = max(state.vmax, float(vals.max()))
-        state.n += int(vals.size)
+        state.n += int(w.sum())
         means = np.concatenate([state.means, vals])
-        weights = np.concatenate([state.weights, np.ones(vals.size, np.float64)])
+        weights = np.concatenate([state.weights, w.astype(np.float64)])
         state.means, state.weights = self._compress(means, weights)
 
     update_i32 = update

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from bloom_filter_spark.operators import (
     build_grouped, build_sketch, build_sketch_preagg, membership_scan)
 from bloom_filter_spark.operators.build import (
-    _attr_through_projects, _native_grouped_partials, _native_parquet_partials)
+    _attr_through_projects, _native_scan, _parquet_splits)
 from bloom_filter_spark.sketches import (
     BloomParams, BloomSketch, CMSParams, CMSSketch, CountSketch,
     CountSketchParams, HLLParams, HLLSketch, KLLParams, KLLSketch,
@@ -38,14 +38,28 @@ def test_eligibility_guards(tokens):
     assert _attr_through_projects(
         tokens.select(F.explode("tokens").alias("v")), ["v"]) is None
     # order/partition-sensitive sketches never take the native path
-    assert _native_parquet_partials(
-        tokens, KLLSketch(KLLParams(k=200)), "tokens", "i32_array") is None
-    assert _native_parquet_partials(
-        tokens, TDigestSketch(TDigestParams(100)), "n_tok", "f64") is None
+    assert _native_scan(tokens, ["tokens"], KLLSketch(KLLParams(k=200))) is None
+    assert _native_scan(tokens, ["n_tok"], TDigestSketch(TDigestParams(100))) is None
     # non-string group column declines the grouped native path
-    assert _native_grouped_partials(
-        tokens, HLLSketch(HLLParams(b=12)), "n_tok", "tokens",
-        "i32_array") is None
+    assert _native_scan(tokens, ["n_tok", "tokens"], HLLSketch(HLLParams(b=12)),
+                        need_types={"n_tok": "string"}) is None
+    assert _native_scan(tokens, ["source", "tokens"], HLLSketch(HLLParams(b=12)),
+                        need_types={"source": "string"}) is not None
+
+
+def test_eligibility_fails_loudly(spark, tokens, tmp_path, monkeypatch):
+    """An unreadable file declines the native path; a Python error in the
+    eligibility proof propagates instead of silently routing to the JVM."""
+    bad = tmp_path / "not.parquet"
+    bad.write_bytes(b"not a parquet file")
+    assert _parquet_splits(spark, [str(bad)], ["tokens"]) is None
+    import pyarrow.parquet as pq
+
+    def broken(*a, **k):
+        raise TypeError("bug")
+    monkeypatch.setattr(pq, "ParquetFile", broken)
+    with pytest.raises(TypeError):
+        _native_scan(tokens, ["tokens"], HLLSketch(HLLParams(b=12)))
 
 
 @pytest.mark.parametrize("sketch", [
@@ -55,8 +69,7 @@ def test_eligibility_guards(tokens):
     CountSketch(CountSketchParams(w=1 << 12, d=5)),
 ], ids=["bloom", "hll", "cms", "countsketch"])
 def test_native_build_bit_identical(tokens, sketch):
-    assert _native_parquet_partials(
-        tokens, sketch, "tokens", "i32_array") is not None
+    assert _native_scan(tokens, ["tokens"], sketch) is not None
     blob_native, n_native = build_sketch(tokens, sketch, "tokens", "i32_array")
     # repartition pins the JVM mapInArrow path
     blob_jvm, n_jvm = build_sketch(tokens, sketch, "tokens", "i32_array",

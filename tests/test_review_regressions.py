@@ -70,16 +70,21 @@ def test_checkpoint_rerun_supersedes_not_duplicates(spark, sf_small, tmp_path):
     assert blob3 == blob1 and n3 == n1
 
 
-def test_grouped_preagg_skips_null_values(spark):
-    from bloom_filter_spark.operators import build_grouped_preagg, membership_udf
+@pytest.mark.parametrize("strategy", ["mapside", "salted"])
+def test_grouped_skips_null_values(spark, strategy):
+    from bloom_filter_spark.operators import build_grouped
     from bloom_filter_spark.sketches import BloomParams, BloomSketch
     df = spark.createDataFrame(
         [("g1", 5), ("g1", None), ("g1", 7)], "source string, v int")
     sk = BloomSketch(BloomParams(n=64, p=0.01))
-    rows = build_grouped_preagg(df, sk, "source", "v", "i32").collect()
+    rows = build_grouped(df, sk, "source", "v", "i32",
+                         strategy=strategy).collect()
     assert rows[0].n_items == 2  # null never counted or inserted
     _, state = BloomSketch.deserialize(bytes(rows[0].state))
     assert sk.contains_i32(state, np.array([5, 7], np.int32)).all()
+    only = sk.empty()
+    sk.update_i32(only, np.array([5, 7], np.int32))
+    assert (state == only).all()
 
 
 def test_lsh_signatures_respect_string_ids(spark):

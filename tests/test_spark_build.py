@@ -66,21 +66,23 @@ def test_merge_tree_multilevel(spark, tokens_df):
     assert bytes(row.state) == blob
 
 
-def test_merge_auto_routes_by_state_volume(spark, tokens_df):
+def test_merge_auto_routes_by_state_volume(spark, tokens_df, monkeypatch):
     """The router must pick the executor tree when P x |state| exceeds the
     threshold and the driver fold otherwise — byte-identical results."""
+    from bloom_filter_spark.operators import merge as merge_mod
     from bloom_filter_spark.operators.merge import (
         merge_partials_auto, merge_partials_collect, state_size_estimate)
     sketch = BloomSketch(BloomParams(n=60_000, p=0.01))
     partials = build_partials(tokens_df, sketch, "tokens", "i32_array",
                               repartition=16).cache()
     collect_blob, n1 = merge_partials_collect(partials, sketch)
-    # threshold 0 forces the tree path (any P x |state| exceeds it)
-    tree_blob, n2 = merge_partials_auto(partials, sketch, fanin=4,
-                                        threshold_bytes=0)
-    # huge threshold forces the driver fold
-    fold_blob, n3 = merge_partials_auto(partials, sketch,
-                                        threshold_bytes=1 << 60)
+    # zero budgets force the tree path (any P x |state| exceeds them)
+    monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", 0)
+    monkeypatch.setattr(merge_mod, "AUTO_TREE_THRESHOLD_BYTES", 0)
+    tree_blob, n2 = merge_partials_auto(partials, sketch, fanin=4)
+    # a huge driver budget forces the driver fold
+    monkeypatch.setattr(merge_mod, "DRIVER_COLLECT_MAX_BYTES", 1 << 60)
+    fold_blob, n3 = merge_partials_auto(partials, sketch)
     partials.unpersist()
     assert collect_blob == tree_blob == fold_blob
     assert n1 == n2 == n3
@@ -283,20 +285,17 @@ def test_mismatched_params_merge_refused(spark, tokens_df):
 
 
 def test_grouped_paths_produce_identical_states(spark, tokens_df):
-    """Salted, map-side, and JVM-preagg grouped builds are bit-identical
-    (HLL register-max merge is order-insensitive, so every strategy must
-    land on the same registers)."""
-    from bloom_filter_spark.operators import build_grouped_preagg
+    """Salted and map-side grouped builds are bit-identical (HLL
+    register-max merge is order-insensitive, so both strategies must land
+    on the same registers)."""
     sk = HLLSketch(HLLParams(b=12))
     a = {r.group: bytes(r.state) for r in build_grouped(
         tokens_df, sk, "source", "tokens", "i32_array",
         n_salts=8, salt_on="doc_id", strategy="salted").collect()}
-    b = {r.group: bytes(r.state) for r in build_grouped_preagg(
-        tokens_df, sk, "source", "tokens").collect()}
     c = {r.group: bytes(r.state) for r in build_grouped(
         tokens_df, sk, "source", "tokens", "i32_array",
         strategy="mapside").collect()}
-    assert a == b == c
+    assert a == c
     ns = {r.group: r.n_items for r in build_grouped(
         tokens_df, sk, "source", "tokens", "i32_array",
         strategy="mapside").collect()}
@@ -311,6 +310,36 @@ def test_preagg_direct_identical_cms(spark, tokens_df):
     direct, n1 = build_sketch(tokens_df, sk, "tokens", "i32_array")
     pre, n2 = build_sketch_preagg(tokens_df, sk, "tokens", "i32_array")
     assert direct == pre and n1 == n2
+
+
+def test_preagg_direct_identical_cms_i64(spark):
+    """Pre-aggregated CMS over i64 keys hashes them as i64, exactly like the
+    direct build — never truncated to i32, which undercounts."""
+    from bloom_filter_spark.operators import build_sketch_preagg
+    rows = [(7,)] * 5 + [(10 ** 12,)] * 3 + [(42,)] * 2 + [(None,)]
+    df = spark.createDataFrame(rows, "v long").repartition(3)
+    sk = CMSSketch(CMSParams(eps=0.01, delta=0.01))
+    direct, n1 = build_sketch(df, sk, "v", "i64")
+    pre, n2 = build_sketch_preagg(df, sk, "v", "i64")
+    assert pre == direct and n1 == n2 == 10
+    _, state = CMSSketch.deserialize(pre)
+    keys = np.array([7, 10 ** 12, 42], np.int64)
+    assert (sk.point_i64(state, keys) >= [5, 3, 2]).all()
+
+
+def test_preagg_tdigest_drops_nan_like_direct(spark):
+    """Pre-aggregated t-digest drops NaN keys, as the direct update does."""
+    from bloom_filter_spark.operators import build_sketch_preagg
+    vals = [1.0] * 3 + [2.0] + [3.0] * 2 + [float("nan")] * 4 + [5.0]
+    df = spark.createDataFrame([(v,) for v in vals], "v double")
+    sk = TDigestSketch(TDigestParams(100))
+    direct, _ = build_sketch(df, sk, "v", "f64")
+    pre, _ = build_sketch_preagg(df, sk, "v", "f64")
+    _, d = TDigestSketch.deserialize(direct)
+    _, p = TDigestSketch.deserialize(pre)
+    assert (p.n, p.vmin, p.vmax) == (d.n, d.vmin, d.vmax) == (7, 1.0, 5.0)
+    assert not np.isnan(p.means).any()
+    assert list(sk.quantiles(p, [0.5, 1.0])) == list(sk.quantiles(d, [0.5, 1.0]))
 
 
 def test_register_sql_probes(spark, sf_small, bloom_blob):

@@ -44,6 +44,8 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.check_correctness import canon  # noqa: E402
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC_DIR = "/root/testdata/sf0.1"
 OUT_ROOT = os.path.join(REPO, ".sf1_testdata")
@@ -162,24 +164,6 @@ def ensure_sf1_testdata() -> str:
     return OUT_DIR
 
 
-def canon(df) -> str:
-    # identical to tools/check_correctness.py::canon
-    df = df.reindex(sorted(df.columns), axis=1)
-    rows = []
-    for _, row in df.iterrows():
-        cells = []
-        for v in row:
-            if isinstance(v, float):
-                cells.append(f"{v:.9g}")
-            elif isinstance(v, bool):
-                cells.append(str(bool(v)))
-            else:
-                cells.append(str(v))
-        rows.append("|".join(cells))
-    rows.sort()
-    return hashlib.md5("\n".join(rows).encode()).hexdigest()
-
-
 def main() -> int:
     import duckdb
 
@@ -193,6 +177,11 @@ def main() -> int:
         json_path = argv[i + 1]
         del argv[i:i + 2]
     only = set(argv)
+    unknown = sorted(only - set(SUBSET))
+    if unknown:
+        print(f"error: not in the sf1 subset: {', '.join(unknown)}",
+              file=sys.stderr)
+        return 2
 
     sf_dir = ensure_sf1_testdata()
     # DELIBERATE exception to check_correctness.py's /root/testdata guard:
